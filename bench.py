@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from buildlogparser_spark.session import get_spark  # noqa: E402
+from buildlogparser_spark.session import default_cores, get_spark  # noqa: E402
 from buildlogparser_spark.datagen import gen_events_spark  # noqa: E402
 from buildlogparser_spark.transcripts import derive_transcripts  # noqa: E402
 from buildlogparser_spark.operators.classify import classify  # noqa: E402
@@ -51,7 +51,7 @@ from buildlogparser_spark.rules.table import default_stack  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_cores()
     bench_turns = int(os.environ.get("SPARK_GRAFT_BENCH_TURNS", "0"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
@@ -166,7 +166,7 @@ def main() -> None:
             diags, os.path.join(tmp, "sinks"), n_salt=4, ts_granularity="month"))
         timed("q10_dedup_exact", lambda: dedup.dedup_exact(documents).count())
         timed("q11_minhash_lsh", lambda: dedup.lsh_candidates(
-            documents, snapshot_key=sf_dir).count())
+            documents).count())
         timed("q12_simhash", lambda: dedup.simhash(documents).count())
         timed("q13_cosine_topk", lambda: similarity.cosine_topk(
             embeddings, query_ids=[1, 2, 3, 4, 5], k=5).collect())
@@ -188,23 +188,21 @@ def main() -> None:
         # snapshot writes — per-job constants that vanish at cluster scale,
         # not data-proportional work (the data stages alone are <2 s)
         timed("q17_curation_pipeline",
-              lambda: curate.curation_pipeline(
-                  documents, snapshot_key=sf_dir).count())
+              lambda: curate.curation_pipeline(documents).count())
         # late round-5 additions (outside the comparable sum): chat→SFT
         # pair extraction over the full transcript stream, and tf-idf
         # keyword extraction over the documents table
         timed("q18_sft_pairs", lambda: sft.sft_pairs(transcripts).count())
-        timed("q19_tfidf_top_terms", lambda: textstats.tfidf_top_terms(
-            documents, snapshot_key=sf_dir).count())
+        timed("q19_tfidf_top_terms",
+              lambda: textstats.tfidf_top_terms(documents).count())
         # final round-5 additions (outside the comparable sum): DSIR
         # selection weights, C4 page cleaning over structure-injected
         # docs, and the trained logistic quality classifier
-        timed("q20_dsir_weights", lambda: dsir.dsir_weights(
-            documents, snapshot_key=sf_dir).count())
+        timed("q20_dsir_weights", lambda: dsir.dsir_weights(documents).count())
         timed("q21_c4_clean", lambda: c4.c4_clean(
-            c4.inject_structure(documents), snapshot_key=sf_dir).count())
+            c4.inject_structure(documents)).count())
         timed("q22_quality_classifier", lambda: quality_clf.quality_classifier(
-            documents, snapshot_key=sf_dir).count())
+            documents).count())
         # temporal joins (outside the comparable sum): as-of versioned
         # registry enrich (broadcast floor-lookup) and incident-window
         # range attribution (broadcast equi-join + range post-filter)

@@ -55,6 +55,12 @@ from buildlogparser_spark.operators import textstats as ts
 from buildlogparser_spark.operators import winnow as wn
 
 
+# ceil(sqrt(500)): the corpus-scaled IVF list count for the 500-vector
+# embeddings table the folded parity test runs on
+IVF_AUTO_CENTROIDS_SMOKE = 23
+_ANN_QUERY_IDS = [1, 2, 3, 4, 5]  # the graded ANN rows' query ids
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import __spark_entry__ as E
 
@@ -115,7 +121,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_signatures": lambda spark, sf: dd.minhash_signatures_flat(
             _docs(spark, sf)),
         "ngram_jaccard_pairs": lambda spark, sf: dd.ngram_jaccard_pairs(
-            _docs(spark, sf), snapshot_key=sf),
+            _docs(spark, sf)),
         # fingerprint stage of the graded simhash_near_pairs
         "simhash": lambda spark, sf: dd.simhash(_docs(spark, sf)),
         # textstats siblings (graded: lang_id / token_count / quality_score)
@@ -140,20 +146,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boilerplate_ngrams": lambda spark, sf: cf.boilerplate_ngrams(
             _docs(spark, sf)),
         "boilerplate_stats": lambda spark, sf: cf.boilerplate_stats(
-            _docs(spark, sf), snapshot_key=sf),
+            _docs(spark, sf)),
         # realistic token budget (GPT-2 pre-tokenizer BPE estimate — round 5;
         # graded sibling: sequence_pack_plan carries the packing gate row)
         "sequence_pack_plan_bpe": lambda spark, sf: cf.sequence_pack_plan(
             _docs(spark, sf), tokenizer="bpe"),
         # IVF assignment stage of the graded ivf_topk / semantic_dedup rows
-        # (same trained quantizer + snapshot key, so all three share one
-        # k-means training and one assignment snapshot per session)
+        # (same trained quantizer over the same input, so all three share
+        # one k-means training and one assignment snapshot per session)
         "ivf_assign": lambda spark, sf: sim.ivf_assign(
-            _emb(spark, sf), n_centroids=16, snapshot_key=sf),
+            _emb(spark, sf), n_centroids=16),
+        # the graded ivf_topk row with the corpus-scaled quantizer
+        # (n_centroids=None → ceil(sqrt(N))); the oracle takes the count as
+        # a literal, pinned to _auto_n_centroids by tests/test_gate_folded.py
+        "ivf_topk_auto": lambda spark, sf: sim.ivf_topk(
+            _emb(spark, sf), _ANN_QUERY_IDS, k=5, n_centroids=None),
         # product quantization code stage (round 5): codebook bit-parity
         # pinned in tests/test_pq.py; graded siblings: pq_topk / ivfpq_topk
         "pq_encode": lambda spark, sf: sim.pq_encode(
-            _emb(spark, sf), snapshot_key=sf),
+            _emb(spark, sf)),
         # Misra–Gries heavy-hitter templates: bounded-memory candidates +
         # exact recount — carries a FULL oracle because its contract is
         # exactness under the MG frequency bound, asserted in
@@ -168,7 +179,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # MOSS-style shared-fingerprint candidate pairs with the max_df
         # boilerplate guard (graded dedup siblings: lsh_candidates etc.)
         "winnow_match_pairs": lambda spark, sf: wn.winnow_match_pairs(
-            _docs(spark, sf), snapshot_key=sf),
+            _docs(spark, sf)),
         # RAG/retrieval prep: overlapping character chunks
         "doc_chunks": lambda spark, sf: ch.doc_chunks(_docs(spark, sf)),
         # deterministic shard-local training-order shuffle (graded packing
@@ -182,27 +193,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # corpus_sample carries the md5-bucket gate row)
         "split_assign": lambda spark, sf: cf.split_assign(_docs(spark, sf)),
         # cross-split near-dup leakage guard: reuses the graded
-        # lsh_candidates row's banded-signature snapshot (same key)
-        "split_leakage": lambda spark, sf: cf.split_leakage(
-            _docs(spark, sf), snapshot_key=sf),
+        # lsh_candidates row's banded-signature snapshot (same input)
+        "split_leakage": lambda spark, sf: cf.split_leakage(_docs(spark, sf)),
         # CCNet head/middle/tail selection (Wenzek et al. 2020): per-language
         # perplexity terciles over the graded bigram-LM scores (graded
         # siblings: bigram_lm_score + lang_id carry the component gate rows)
-        "ccnet_buckets": lambda spark, sf: lm.ccnet_buckets(
-            _docs(spark, sf), snapshot_key=sf),
+        "ccnet_buckets": lambda spark, sf: lm.ccnet_buckets(_docs(spark, sf)),
         # per-doc token-distribution Shannon entropy (repetitiveness /
         # information-density signal; graded siblings: repetition_stats
         # and quality_score carry the text-quality gate rows)
         "token_entropy": lambda spark, sf: ts.token_entropy(_docs(spark, sf)),
         # incremental ingest dedup: incoming snapshot half judged against
         # the existing half (exact digest join + cross-half band-bucket
-        # join on the SAME banded snapshot key as graded lsh_candidates);
+        # join on one banded-signature snapshot);
         # runs over the dup-injected corpus so the 'exact' branch is
         # non-vacuous (the inject_pii lesson — the synthetic corpus has no
         # cross-half exact duplicates)
         "cross_snapshot_dedup": lambda spark, sf: dd.cross_snapshot_dedup(
-            dd.inject_snapshot_dups(_docs(spark, sf)),
-            snapshot_key=f"{sf}:snapdups"),
+            dd.inject_snapshot_dups(_docs(spark, sf))),
         # big-big AS-OF plan: bucketed union-merge (graded sibling:
         # asof_enrich carries the broadcast floor-lookup gate row)
         "asof_enrich_merge": lambda spark, sf: tpr.asof_enrich_merge(
@@ -225,7 +233,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # LSH-blocked embedding near-dup (graded: ann_lsh_topk carries the
         # hyperplane-LSH gate row; recall vs exact pytest-asserted)
         "embedding_near_dup": lambda spark, sf: sim.embedding_near_dup_lsh(
-            _emb(spark, sf), threshold=0.4, snapshot_key=sf),
+            _emb(spark, sf), threshold=0.4),
     }
 
 
@@ -266,6 +274,8 @@ def oracle_sql() -> dict[str, str]:
         "boilerplate_stats": cf.boilerplate_stats_sql(),
         "sequence_pack_plan_bpe": cf.sequence_pack_plan_sql(tokenizer="bpe"),
         "ivf_assign": sim.ivf_assign_sql(),
+        "ivf_topk_auto": sim.ivf_topk_sql(
+            _ANN_QUERY_IDS, k=5, n_centroids=IVF_AUTO_CENTROIDS_SMOKE),
         "pq_encode": sim.pq_encode_sql(),
         "heavy_hitter_templates": sk.heavy_hitter_templates_sql(
             _diag_sql(["message"])),

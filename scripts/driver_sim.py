@@ -113,6 +113,9 @@ def main() -> int:
             bad = (a != b).any(axis=1) if len(a) == len(b) and list(a.columns) == list(b.columns) else None
             if bad is not None:
                 print(pd.concat([a[bad].head(3), b[bad].head(3)], keys=["spark", "duckdb"]))
+    from buildlogparser_spark.materialize import STATS
+
+    print(f"snapshots: written={STATS['written']} memo_hits={STATS['hits']}")
     print("DRIVER-SIM:", "ALL MATCH" if fails == 0 else f"{fails} MISMATCHES")
     spark.stop()
     return 1 if fails else 0

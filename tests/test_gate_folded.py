@@ -3,7 +3,7 @@ queries consolidated OUT of the driver's graded sweep (VERDICT r03 #1) keep
 the exact same Spark-vs-DuckDB compare here — same normalize, same
 column/row/value equality the driver hash-checks.
 
-Also asserts the graded sweep's contract: ≤64 entries, ≥56 oracled, no
+Also asserts the graded sweep's contract: ≤68 entries, ≥64 oracled, no
 overlap with the folded registry, rows-only tail last.
 """
 
@@ -13,6 +13,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from buildlogparser_spark import gate_folded
+from buildlogparser_spark.operators import similarity as sim
 from conftest import SF_SMOKE, assert_frames_match, duck_df
 
 FOLDED_NAMES = sorted(gate_folded.queries().keys())
@@ -42,6 +43,13 @@ def test_folded_registry_shape():
     q = set(gate_folded.queries())
     o = set(gate_folded.oracle_sql())
     assert o <= q, f"folded oracle without query: {o - q}"
+
+
+def test_ivf_topk_auto_oracle_literal(spark):
+    """The ivf_topk_auto oracle hard-codes the corpus-scaled list count;
+    it must be the count the Spark path derives for the same fixture."""
+    emb = gate_folded._emb(spark, SF_SMOKE)
+    assert gate_folded.IVF_AUTO_CENTROIDS_SMOKE == sim._auto_n_centroids(emb)
 
 
 @pytest.mark.parametrize("name", FOLDED_NAMES)
